@@ -321,14 +321,6 @@ def minhash_from_pairs(pairs: Column, k: int = 64) -> Column:
     return F.array(*[min_for_perm(a, b) for a, b in _perm_mults(k)])
 
 
-def minhash_signature(shingles: Column, k: int = 64) -> Column:
-    """Convenience single-expression form of the signature. Prefer
-    shingle_hash_pairs → minhash_from_pairs with the pairs projected as a
-    named column (see minhash_near_duplicates) so the string hashing runs
-    once, not k times."""
-    return minhash_from_pairs(shingle_hash_pairs(shingles), k)
-
-
 def lsh_band_keys(signature: Column, bands: int, rows: int) -> Column:
     """Band the signature: array of `bands` bucket keys, each hashing `rows`
     consecutive signature slots (banded LSH: P(candidate) ≈ 1-(1-j^r)^b)."""

@@ -533,14 +533,6 @@ def ngram_set_from_tokens(toks: Column, n: int, sep: str = " ") -> Column:
     return F.array_distinct(ngrams_from_tokens(toks, n, sep))
 
 
-def ngram_set(text: Column | str, n: int, sep: str = " ") -> Column:
-    """Distinct word n-grams (sep-joined) as an array column — the
-    contamination / heavy-hitter unit. Inlines the tokenization (fine for
-    one-off expressions); hot paths should project tokens() once and use
-    :func:`ngram_set_from_tokens`."""
-    return ngram_set_from_tokens(tokens(text), n, sep)
-
-
 def _grams_staged(df: DataFrame, text_col: str, n: int) -> DataFrame:
     """(original columns…, gram) — one row per distinct n-gram, with the
     tokenization staged as its own projection (split once per document)."""

@@ -172,20 +172,6 @@ def parse_events(df: DataFrame, json_col: str = "value") -> DataFrame:
     return parsed.withColumn("_corrupt", F.col("event").isNull())
 
 
-def lineage_append_expr(producer: str) -> Column:
-    """T7 lineage accumulation as pure Catalyst: concat the prior array with
-    a fresh single-entry map (copy-not-reference is inherent — columns are
-    immutable)."""
-    return F.concat(
-        F.col("event.UUIDs"),
-        F.array(
-            F.create_map(
-                F.lit(f"{producer}{UUID_KEY_SUFFIX}"), F.expr("uuid()")
-            )
-        ),
-    )
-
-
 def validate_events(df: DataFrame, event_col: str = "event") -> DataFrame:
     """Constraint filter producing an `errors` array column (empty == valid).
 

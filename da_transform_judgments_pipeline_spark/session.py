@@ -95,23 +95,3 @@ def local_df(spark: SparkSession, rows, ddl: str):
         ).cast(f.dataType).alias(f.name)
         for i, f in enumerate(schema.fields)
     ])
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None):
-    """Register the driver testdata parquet tables as temp views; return dict.
-
-    Tables: region nation customer supplier part orders lineitem events
-    documents embeddings (TESTDATA.md).
-    """
-    names = names or [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]
-    out = {}
-    for name in names:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            df.createOrReplaceTempView(name)
-            out[name] = df
-    return out

@@ -8,7 +8,8 @@ Mapping (reference file:line → here):
 - T2 idempotency key `{reference}-{queue}-{latest_uuid}`
   (tre_sqs_sf_trigger.py:144-148) → `exec_name` column
 - T3 duplicate-resend tolerance (test_tdr_duplicate_resend_parallel.py)
-  → dropDuplicates within a watermark on the idempotency key
+  → per-micro-batch dropDuplicates on the idempotency key; resends in
+  later batches are the T10 guard's
 - T4 retry loop, limit <3 (tre_bagit_checksum_validation.py:159-163;
   test_tdr_bagit_retry.py:64-78) → retry-count column + route filter
 - T5 ok/error bifurcation (tre_vb_validate_bagit.py:124-161) → route column
@@ -19,11 +20,12 @@ Mapping (reference file:line → here):
 - T10 exactly-once-per-attempt guard (tre_editorial_integration.py:179-191)
   → left-anti join against the processed-key table before dispatch
 
-Scale notes: all per-event work is row-parallel inside foreachBatch; the
-only stateful operator is the dedup (keyed state bounded by the watermark).
-The DLQ/processed tables are append-only parquet keyed by the idempotency
-key, so the T10 guard is a broadcast-able anti-join at any realistic
-dead-letter cardinality.
+Scale notes: all per-event work is row-parallel inside foreachBatch and
+the stream has no stateful operator: the checkpoint holds only offsets
+and commits, and there are no watermarks and no late-data semantics
+(SQS handles time in the reference). The DLQ/processed tables are
+append-only parquet keyed by the idempotency key, so the T10 guard is a
+broadcast-able anti-join at any realistic dead-letter cardinality.
 """
 
 from __future__ import annotations
@@ -64,7 +66,11 @@ def with_identity(df: DataFrame, queue: str = DEFAULT_QUEUE) -> DataFrame:
     - `event_name` (dispatch key), `reference` (consignment), `latest_uuid`
       (W1 — newest lineage entry), `exec_name` (T2 idempotency key),
       `retries` (T4 counter from the event's own parameter block),
-      `event_time` (envelope ns timestamp as a µs TIMESTAMP for watermarks).
+      `event_time` (envelope ns timestamp as a µs TIMESTAMP).
+
+    An envelope without a reference or lineage (one that does not parse,
+    say) is keyed on a digest of its raw text instead, so distinct bad
+    messages stay distinct while a verbatim resend still dedups.
     """
     e = F.col("event")
     name = e["producer"]["event-name"]
@@ -78,7 +84,12 @@ def with_identity(df: DataFrame, queue: str = DEFAULT_QUEUE) -> DataFrame:
         .withColumn("latest_uuid", latest)
         .withColumn(
             "exec_name",
-            F.concat_ws("-", "reference", F.lit(queue), "latest_uuid"),
+            F.when(
+                F.col("reference").isNull() | F.col("latest_uuid").isNull(),
+                F.concat_ws("-", F.lit(queue), F.sha2("value", 256)),
+            ).otherwise(
+                F.concat_ws("-", "reference", F.lit(queue), "latest_uuid")
+            ),
         )
         .withColumn(
             "retries",
@@ -91,15 +102,6 @@ def with_identity(df: DataFrame, queue: str = DEFAULT_QUEUE) -> DataFrame:
             "event_time",
             F.timestamp_micros((F.col("event")["timestamp"] / 1000).cast("long")),
         )
-    )
-
-
-def dedup_events(df: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """T3: drop duplicate sends of the same idempotency key. The watermark
-    bounds the dedup state (the reference relies on Step Functions' unique
-    execution names for the same effect)."""
-    return df.withWatermark("event_time", watermark).dropDuplicates(
-        ["exec_name"]
     )
 
 
@@ -136,8 +138,8 @@ def bump_retry_counter(df: DataFrame) -> DataFrame:
     A fresh `{producer}-UUID` lineage hop is appended too (T7): each retry
     attempt is a NEW execution in the reference (v2 lambdas append a UUID
     to the error event, v1 mints uuid4 per trigger — tdr_message.py:19-41),
-    so the re-queued event must carry a new idempotency key or the T3
-    dedup / T10 replay guard would swallow its own retry.
+    so the re-queued event must carry a new idempotency key or the T10
+    replay guard would swallow its own retry.
     """
     e = F.col("event")
     name = F.col("event_name")
@@ -233,14 +235,6 @@ def replay_guard(batch: DataFrame, seen: DataFrame | None) -> DataFrame:
     if seen is None:
         return batch
     return batch.join(seen.select("exec_name"), "exec_name", "left_anti")
-
-
-def _processed_keys(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    path = f"{out_dir}/processed"
-    try:
-        return spark.read.parquet(path).select("exec_name")
-    except Exception:
-        return None
 
 
 def batch_key(checkpoint_dir: str, batch_id: int) -> str:
@@ -385,8 +379,11 @@ def run_pipeline(
     retry_limit: int = RETRY_LIMIT,
     on_batch_complete: Callable[[int], None] | None = None,
 ):
-    """Run the event pipeline: read → identity → dedup → route →
-    foreachBatch dispatch.
+    """Run the event pipeline: read → identity → route → foreachBatch
+    dedup and dispatch. The stream keeps no state: each batch drops its
+    own duplicate keys (T3) and the ledger guard drops keys an earlier
+    batch dispatched, so every message is routed whatever its envelope
+    timestamp.
 
     Per batch (T1): `ok` rows are dispatched per event-name through
     `stages` (each stage gets (spark, batch_df_for_its_event) and returns an
@@ -416,9 +413,9 @@ def run_pipeline(
     """
     stages = stages or {}
     stream = route_events(
-        dedup_events(with_identity(read_event_stream(
+        with_identity(read_event_stream(
             spark, input_path, max_files_per_trigger
-        ), queue)),
+        ), queue),
         retry_limit,
     )
     stream = with_message_attributes(stream)
@@ -437,7 +434,12 @@ def run_pipeline(
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         key = batch_key(checkpoint_dir, batch_id)
-        b = batch.select(*flat_cols, "event").persist()
+        # T3: in-batch resends collapse here; cross-batch ones at the guard
+        b = (
+            batch.select(*flat_cols, "event")
+            .dropDuplicates(["exec_name"])
+            .persist()
+        )
         try:
             # T10 replay guard MINUS this batch's own ledger partition
             # (lineage-qualified key): a crashed batch always replays

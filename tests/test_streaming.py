@@ -67,14 +67,40 @@ def _read(spark, path):
 
 
 def test_ok_path_dispatch(spark, tmp_path):
-    events = [_event("TDR-2023-AAA"), _event("TDR-2023-BBB")]
-    out = _run(spark, tmp_path, events)
+    """Ok events dispatch with their T8 attributes. The stream keeps no
+    state: one availableNow call over one file runs one micro-batch and
+    the checkpoint has no state/ dir; on the same checkpoint a message
+    stamped an hour before an earlier one still routes, and a verbatim
+    resend in a later file is dropped by the ledger."""
+    aaa = _event("TDR-2023-AAA")
+    indir = tmp_path / "in"
+    _write_events(indir, [aaa, _event("TDR-2023-BBB")])
+    out = tmp_path / "out"
+    ckpt = tmp_path / "ckpt"
+
+    def call():
+        q = orchestrator.run_pipeline(spark, str(indir), str(out), str(ckpt))
+        q.awaitTermination(60)
+        return q
+
+    q = call()
+    assert len(q.recentProgress) == 1
+    assert not (ckpt / "state").exists()
     got = _read(spark, out / "events")
     refs = {r["reference"] for r in got.collect()}
     assert refs == {"TDR-2023-AAA", "TDR-2023-BBB"}
     assert {r["route"] for r in got.collect()} == {"ok"}
     # T8 message attributes present
     assert {"attr_environment", "attr_event_name"} <= set(got.columns)
+
+    late = _event("TDR-2023-LATE")
+    late["timestamp"] = aaa["timestamp"] - 3600 * 10**9
+    _write_events(indir, [late, aaa], name="later.jsonl")
+    call()
+    got = _read(spark, out / "events").collect()
+    assert sorted(r["reference"] for r in got) == [
+        "TDR-2023-AAA", "TDR-2023-BBB", "TDR-2023-LATE"
+    ]
 
 
 def test_duplicate_resend_dedup(spark, tmp_path):
@@ -153,19 +179,34 @@ def test_unknown_event_name_routes_to_invalid(spark, tmp_path):
 
 
 def test_invalid_event_routes_to_dlq(spark, tmp_path):
+    """Unparseable envelopes dead-letter keyed on a digest of their text:
+    two different bad lines sent in two calls on one checkpoint give two
+    DLQ rows and two alerts, and a verbatim resend of one adds none."""
     indir = tmp_path / "in"
     indir.mkdir(parents=True)
-    (indir / "bad.jsonl").write_text('{"not": "an event"}\n')
     out = tmp_path / "out"
     alerts = []
-    q = orchestrator.run_pipeline(
-        spark, str(indir), str(out), str(tmp_path / "ckpt"),
-        alert=alerts.extend,
-    )
-    q.awaitTermination(60)
+
+    def call(name, line):
+        (indir / name).write_text(line + "\n")
+        q = orchestrator.run_pipeline(
+            spark, str(indir), str(out), str(tmp_path / "ckpt"),
+            alert=alerts.extend,
+        )
+        q.awaitTermination(60)
+
+    call("bad.jsonl", '{"not": "an event"}')
     dlq = _read(spark, out / "dlq").collect()
     assert len(dlq) == 1 and dlq[0]["route"] == "invalid"
     assert len(alerts) == 1
+    call("bad2.jsonl", "not json at all")
+    call("bad3.jsonl", '{"not": "an event"}')
+    dlq = _read(spark, out / "dlq").collect()
+    assert sorted(r["value"] for r in dlq) == [
+        "not json at all", '{"not": "an event"}'
+    ]
+    assert {r["route"] for r in dlq} == {"invalid"}
+    assert len(alerts) == 2
 
 
 def test_stage_dispatch_and_replay_guard(spark, tmp_path):
@@ -622,8 +663,8 @@ def test_pipeline_chaos_restart_exactly_once(spark, tmp_path):
     the worst-case window — after every sink append including the
     processed ledger, before the offset commit — forcing a full batch
     replay on restart, (b) a verbatim duplicate resend in the same wave
-    (T3 in-batch dedup) AND across restart (T10 ledger — watermark state
-    died with the crash), and (c) the failing event driven around the
+    (T3 in-batch dedup) AND across restart (T10 ledger — the stream keeps
+    no dedup state), and (c) the failing event driven around the
     retry loop via the pipeline's own re-queue output until dead-letter.
     Exactly-once at every sink: zero duplicate dispatches, retry counters
     1 then 2, one DLQ row, one alert."""
@@ -683,8 +724,8 @@ def test_pipeline_chaos_restart_exactly_once(spark, tmp_path):
         ("TDR-CHAOS-BAD", 1)
     ]
 
-    # wave 2: verbatim resend of wave 1 (cross-restart duplicate — T3's
-    # watermark state is gone; only the T10 ledger can stop it) + the
+    # wave 2: verbatim resend of wave 1 (cross-restart duplicate — T3
+    # only dedups within a batch; only the T10 ledger can stop it) + the
     # pipeline's own re-queue output fed back (retry hop 1 → 2)
     (indir / "wave2.jsonl").write_text(wave1)
     (indir / "wave2-requeue.jsonl").write_text(
