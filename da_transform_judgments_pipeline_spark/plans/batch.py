@@ -37,6 +37,8 @@ plus the manifest-sized validated-file lists the output events must carry
 from __future__ import annotations
 
 import os
+import re
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -426,7 +428,7 @@ def validate_bagit_files_batch(
     listing_counts: dict[str, int] = {}
     if listing is not None:
         listing = listing.select(
-            F.regexp_replace("path", "^file:" + _re(store) + "/", "").alias(
+            F.regexp_replace("path", "^file:" + re.escape(store) + "/", "").alias(
                 "relpath"
             )
         )
@@ -699,6 +701,24 @@ EVENT_SIP_AVAILABLE = "dri-preingest-sip-available"
 EVENT_SIP_ERROR = "dri-preingest-sip-error"
 
 
+def _file_and_sidecar(name, side_name, content, listed_name):
+    """Column ``f``: explode of one row's file and its ``.sha256`` sidecar
+    (``<sha256>  <listed_name>``), both from ONE evaluation of the row —
+    a union of two selects would evaluate a grouped UDF once per
+    branch."""
+    return F.explode(
+        F.array(
+            F.struct(name.alias("name"), content.alias("content")),
+            F.struct(
+                side_name.alias("name"),
+                F.concat(F.sha2(content, 256), F.lit("  "), listed_name, F.lit("\n"))
+                .cast("binary")
+                .alias("content"),
+            ),
+        )
+    ).alias("f")
+
+
 def bagit_to_dri_sip_batch(
     spark: SparkSession, events: list[dict], ctx: StageContext
 ) -> list[dict]:
@@ -724,14 +744,19 @@ def bagit_to_dri_sip_batch(
     3. ONE plan renders every consignment's metadata.csv + closure.csv
        (dri_metadata_keyed / dri_closure_keyed over a broadcast config
        dim; per-group CSV text via render_csv_by_key — byte-identical to
-       the sequential render).
-    4. ONE distributed write lands CSVs, .sha256 sidecars (sha2 over the
-       in-flight CSV text — the same bytes the file holds), and schema
-       files under each ``{root}/sip/``.
-    5. ONE tar_gz_pack call packs every SIP (applyInPandas groups by
-       archive — one task per consignment's tar.gz, the same per-archive
-       memory model as the sequential stage), then one distributed write
-       lands each archive + its sidecar under ``ctx.out_root``.
+       the sequential render), each CSV exactly once.
+    4. Each rendered row is exploded into its CSV file and its .sha256
+       sidecar (sha2 over the in-flight CSV text — the same bytes the
+       file holds); with the schema files that is one small persisted
+       frame, and ONE distributed write lands it under each
+       ``{root}/sip/``.
+    5. ONE tar_gz_pack call packs every SIP from the bagit ``data/`` scan
+       plus that same frame — ``sip/`` is never re-read; its members are
+       named by their ``*_IN_SIP`` keys and stamped with one driver-side
+       write time (applyInPandas groups by archive — one task per
+       consignment's tar.gz, the same per-archive memory model as the
+       sequential stage). One distributed write lands each archive + its
+       sidecar under ``ctx.out_root`` from that single pack evaluation.
 
     Note on error isolation: after config build, the remaining work is
     one fused job set — an engine-side strict-enum error (dri_sip P1
@@ -863,57 +888,40 @@ def bagit_to_dri_sip_batch(
         " identifier_prefix string",
     )
 
-    # 3) every consignment's CSV text in one plan each
-    md_csv = render_csv_by_key(
+    # 3) every consignment's CSV text: one render per CSV
+    rendered = render_csv_by_key(
         dri_metadata_keyed(fm, manifest, config_df),
         "consignment",
         DRI_METADATA_COLUMNS,
-    )
-    cl_csv = render_csv_by_key(
-        dri_closure_keyed(fm, config_df), "consignment", DRI_CLOSURE_COLUMNS
+    ).withColumn("kind", F.lit("METADATA")).unionByName(
+        render_csv_by_key(
+            dri_closure_keyed(fm, config_df), "consignment", DRI_CLOSURE_COLUMNS
+        ).withColumn("kind", F.lit("CLOSURE"))
     )
 
-    # 4) SIP metadata files: CSVs + sidecars + schema files → one write
-    name_dim = local_df(spark, 
+    if len({p["dc"]["BATCH"] for p in live}) != len(live):
+        raise ValueError("duplicate SIP batch names in one batch")
+    # 4) SIP metadata files: each CSV row explodes into its file and its
+    # sidecar; with the schema files that is (consignment, name, content)
+    csv_names = local_df(spark, 
         [
             (
                 p["root"],
-                p["dc"]["METADATA_IN_SIP"],
-                p["dc"]["CLOSURE_IN_SIP"],
-                p["dc"]["METADATA_CHECKSUM_IN_SIP"],
-                p["dc"]["CLOSURE_CHECKSUM_IN_SIP"],
-                p["dc"]["METADATA"],
-                p["dc"]["CLOSURE"],
+                kind,
+                p["dc"][f"{kind}_IN_SIP"],
+                p["dc"][f"{kind}_CHECKSUM_IN_SIP"],
+                p["dc"][kind],
             )
             for p in live
+            for kind in ("METADATA", "CLOSURE")
         ],
-        "consignment string, md_key string, cl_key string, md_side string,"
-        " cl_side string, md_name string, cl_name string",
+        "consignment string, kind string, key string, side_key string,"
+        " file_name string",
     )
-
-    def _sip_files(csv_df, key_col, side_col, name_col):
-        j = csv_df.join(F.broadcast(name_dim), "consignment")
-        sip = F.concat(F.col("consignment"), F.lit("/sip/"))
-        return j.select(
-            F.concat(sip, F.col(key_col)).alias("name"),
-            F.col("csv").cast("binary").alias("content"),
-        ).unionByName(
-            j.select(
-                F.concat(sip, F.col(side_col)).alias("name"),
-                F.concat(
-                    F.sha2(F.col("csv").cast("binary"), 256),
-                    F.lit("  "),
-                    F.col(name_col),
-                    F.lit("\n"),
-                )
-                .cast("binary")
-                .alias("content"),
-            )
-        )
-
     schema_rows = [
         (
-            f"{p['root']}/sip/{p['dc'][dest_key]}",
+            p["root"],
+            p["dc"][dest_key],
             _dri_schema_text(schema_name).encode(),
         )
         for p in live
@@ -922,100 +930,83 @@ def bagit_to_dri_sip_batch(
             ("closure-schema.txt", "CLOSURE_SCHEMA_IN_SIP"),
         )
     ]
-    sip_meta = (
-        _sip_files(md_csv, "md_key", "md_side", "md_name")
-        .unionByName(_sip_files(cl_csv, "cl_key", "cl_side", "cl_name"))
-        .unionByName(
-            local_df(spark, schema_rows, "name string, content binary")
+    # read twice: by the sip/ write and by the pack
+    sip_files = rendered.join(
+        F.broadcast(csv_names), ["consignment", "kind"]
+    ).select(
+        "consignment",
+        _file_and_sidecar(
+            F.col("key"), F.col("side_key"), F.col("csv").cast("binary"),
+            F.col("file_name"),
+        ),
+    ).select("consignment", "f.*").unionByName(
+        local_df(spark, schema_rows, "consignment string, name string, content binary")
+    ).persist()
+    try:
+        # the tar mtime of the in-flight members: one write time
+        written_at = int(time.time())
+        _write_members(
+            sip_files.select(
+                F.concat("consignment", F.lit("/sip/"), "name").alias("name"),
+                "content",
+            ),
+            store,
         )
-    )
-    _write_members(sip_meta, store)
 
-    # 5) one pack job for every SIP, then one archive+sidecar write
-    pack_dim = local_df(spark, 
-        [
-            (
-                p["root"],
-                p["dc"]["BATCH"] + ".tar.gz",
-                p["dc"]["INTERNAL_PREFIX"],
-            )
-            for p in live
-        ],
-        "consignment string, zip_name string, internal_prefix string",
-    )
-    data_members = read_file_catalog(
-        spark, [f"{store}/{p['root']}/data" for p in live]
-    ).withColumn("consignment", root_expr_cases).join(
-        F.broadcast(pack_dim), "consignment"
-    ).select(
-        "consignment",
-        F.col("zip_name").alias("archive"),
-        F.col("path").alias("name"),
-        "content",
-        F.unix_timestamp("modificationTime").alias("mtime"),
-        F.concat(
-            F.lit(f"file:{store}/"), F.col("consignment"), F.lit("/data/")
-        ).alias("rm"),
-        F.col("internal_prefix").alias("add"),
-    )
-    meta_members = read_file_catalog(
-        spark, [f"{store}/{p['root']}/sip" for p in live]
-    ).withColumn("consignment", root_expr_cases).join(
-        F.broadcast(pack_dim), "consignment"
-    ).filter(
-        F.col("path").startswith(
-            F.concat(
-                F.lit(f"file:{store}/"),
-                F.col("consignment"),
-                F.lit("/sip/"),
-                F.col("internal_prefix"),
-            )
+        # 5) one pack of data/ + the in-flight SIP files per archive
+        pack_dim = local_df(spark, 
+            [
+                (
+                    p["root"],
+                    p["dc"]["BATCH"] + ".tar.gz",
+                    p["dc"]["INTERNAL_PREFIX"],
+                )
+                for p in live
+            ],
+            "consignment string, archive string, internal_prefix string",
         )
-    ).select(
-        "consignment",
-        F.col("zip_name").alias("archive"),
-        F.col("path").alias("name"),
-        "content",
-        F.unix_timestamp("modificationTime").alias("mtime"),
-        F.concat(
-            F.lit(f"file:{store}/"),
-            F.col("consignment"),
-            F.lit("/sip/"),
-            F.col("internal_prefix"),
-        ).alias("rm"),
-        F.col("internal_prefix").alias("add"),
-    )
-    packed = tar_gz_pack(
-        data_members.unionByName(meta_members),
-        remove_prefix_col="rm",
-        add_prefix_col="add",
-    )
-    zip_to_root = {p["dc"]["BATCH"] + ".tar.gz": p["root"] for p in live}
-    if len(zip_to_root) != len(live):
-        raise ValueError("duplicate SIP batch names in one batch")
-    zip_dim = local_df(spark, 
-        [(z, r) for z, r in zip_to_root.items()], "archive string, root string"
-    )
-    to_out = packed.join(F.broadcast(zip_dim), "archive").select(
-        F.concat(
-            F.col("root"), F.lit("/sip/"), F.col("archive")
-        ).alias("name"),
-        "content",
-        F.concat(
-            F.sha2(F.col("content").cast("binary"), 256),
-            F.lit("  "),
-            F.col("archive"),
-            F.lit("\n"),
-        ).alias("sidecar"),
-    )
-    sidecars = to_out.select(
-        F.concat(F.col("name"), F.lit(".sha256")).alias("name"),
-        F.col("sidecar").cast("binary").alias("content"),
-    )
-    _write_members(
-        to_out.select("name", "content").unionByName(sidecars),
-        ctx.out_root,
-    )
+        data_members = read_file_catalog(
+            spark, [f"{store}/{p['root']}/data" for p in live]
+        ).withColumn("consignment", root_expr_cases).join(
+            F.broadcast(pack_dim), "consignment"
+        ).select(
+            "archive",
+            F.col("path").alias("name"),
+            "content",
+            F.unix_timestamp("modificationTime").alias("mtime"),
+            F.concat(
+                F.lit(f"file:{store}/"), F.col("consignment"), F.lit("/data/")
+            ).alias("rm"),
+            F.col("internal_prefix").alias("add"),
+        )
+        # SIP names already carry the internal prefix: no substitution
+        meta_members = sip_files.join(
+            F.broadcast(pack_dim), "consignment"
+        ).select(
+            "archive",
+            "name",
+            "content",
+            F.lit(written_at).cast("long").alias("mtime"),
+            F.lit("").alias("rm"),
+            F.lit("").alias("add"),
+        )
+        packed = tar_gz_pack(
+            data_members.unionByName(meta_members),
+            remove_prefix_col="rm",
+            add_prefix_col="add",
+        )
+        zip_key = F.concat("consignment", F.lit("/sip/"), "archive")
+        _write_members(
+            packed.join(F.broadcast(pack_dim), "archive").select(
+                _file_and_sidecar(
+                    zip_key, F.concat(zip_key, F.lit(".sha256")),
+                    F.col("content"), F.col("archive"),
+                )
+            ).select("f.*"),
+            ctx.out_root,
+        )
+    finally:
+        sip_files.unpersist()
 
     for p in live:
         zip_key = f"{p['root']}/sip/{p['dc']['BATCH']}.tar.gz"
@@ -1128,9 +1119,3 @@ def orchestrated_batch_stage(
         )
 
     return stage
-
-
-def _re(s: str) -> str:
-    import re
-
-    return re.escape(s)

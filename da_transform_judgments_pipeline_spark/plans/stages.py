@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import importlib.resources
 import os
+import re
 import shutil
 
 from pyspark.sql import SparkSession
@@ -204,7 +205,7 @@ def validate_bagit_files(
                 read_file_catalog(spark, root_dir)
                 .select(
                     F.regexp_replace(
-                        F.col("path"), f"^file:{_re(store)}/{_re(unpacked_root)}/", ""
+                        F.col("path"), f"^file:{re.escape(store)}/{re.escape(unpacked_root)}/", ""
                     ).alias("file"),
                     "content",
                 )
@@ -319,11 +320,11 @@ def bagit_to_dri_sip(spark: SparkSession, event: dict, ctx: StageContext) -> dic
 
         sip_zip_object = dc["BATCH"] + ".tar.gz"
         data_members = (
-            untar_free_catalog(spark, f"{bagit_root}/data")
+            read_file_catalog(spark, f"{bagit_root}/data")
             .withColumn("rm", F.lit(f"file:{bagit_root}/data/"))
         )
         meta_members = (
-            untar_free_catalog(spark, f"{sip_root}/{dc['INTERNAL_PREFIX']}")
+            read_file_catalog(spark, f"{sip_root}/{dc['INTERNAL_PREFIX']}")
             .withColumn("rm", F.lit(f"file:{sip_root}/{dc['INTERNAL_PREFIX']}"))
         )
         members = data_members.unionByName(meta_members).select(
@@ -361,19 +362,16 @@ def bagit_to_dri_sip(spark: SparkSession, event: dict, ctx: StageContext) -> dic
         return ctx.emit_error(EVENT_SIP_ERROR, event, reference, e)
 
 
-def untar_free_catalog(spark: SparkSession, root: str):
-    """binaryFile catalog of already-extracted files (no archive involved)."""
-    return read_file_catalog(spark, root)
-
-
 def _dri_schema_text(name: str) -> str:
     res = importlib.resources.files("da_transform_judgments_pipeline_spark.plans")
     return (res / "dri_schemas" / name).read_text()
 
 
 def _write_members(members, dest_root: str) -> list[str]:
-    """Distributed member write: foreachPartition writes each untarred member
-    under dest_root (shared FS / object store). Returns extracted names."""
+    """Distributed member write: each partition writes its (name, content)
+    rows under dest_root (shared FS / object store) and yields their
+    names, so the write and the returned name list are ONE Spark action
+    over ``members`` — no persist, no second pass."""
     dest_root = dest_root.rstrip("/")
 
     def write_partition(rows):
@@ -382,16 +380,8 @@ def _write_members(members, dest_root: str) -> list[str]:
             os.makedirs(os.path.dirname(path), exist_ok=True)
             with open(path, "wb") as f:
                 f.write(bytes(row["content"]))
+            yield row["name"]
 
-    members.persist()
-    try:
-        members.foreachPartition(write_partition)
-        return [r["name"] for r in members.select("name").collect()]
-    finally:
-        members.unpersist()
-
-
-def _re(s: str) -> str:
-    import re
-
-    return re.escape(s)
+    return members.select("name", "content").rdd.mapPartitions(
+        write_partition
+    ).collect()

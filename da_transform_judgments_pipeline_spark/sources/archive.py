@@ -270,12 +270,10 @@ def tar_gz_pack(
         buf = io.BytesIO()
         items = []
         # PIN the gzip header timestamp: mode="w:gz" stamps the CURRENT
-        # time into the gzip header, so two evaluations of the same
-        # plan (e.g. the archive branch and the sha256-sidecar branch
-        # of one union) produce different bytes when they straddle a
-        # second boundary — the sidecar then fails verification against
-        # its own archive. mtime=0 makes the pack a pure function of
-        # its inputs (the build_warc_gz/_gzip_member convention).
+        # time into the gzip header, so a task retry or a replayed batch
+        # would re-pack the same members into different bytes.
+        # mtime=0 makes the pack a pure function of its inputs (the
+        # build_warc_gz/_gzip_member convention).
         import gzip as _gzip
 
         gz = _gzip.GzipFile(fileobj=buf, mode="wb", mtime=0)

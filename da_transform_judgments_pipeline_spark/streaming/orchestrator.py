@@ -394,8 +394,8 @@ def run_pipeline(
     stage-specific column, and stages that want a clean sink should
     align with the pass-through columns); `retry` rows go to
     out/retries (a re-queue feed) and `dead-letter` + `invalid` rows to
-    out/dlq — every sink batch_id-partitioned with dynamic-partition
-    OVERWRITE, and the replay guard anti-joins the ledger MINUS the
+    out/dlq — a sink no row routes to is not written, every sink is
+    batch_id-partitioned with dynamic-partition OVERWRITE, and the replay guard anti-joins the ledger MINUS the
     batch's own partition, so a crash in ANY window replays to
     identical contents (the crawl_stream exactly-once posture; the
     ``alert`` callback (T6 — Slack in the reference, injectable here)
@@ -435,7 +435,7 @@ def run_pipeline(
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         key = batch_key(checkpoint_dir, batch_id)
         # T3: in-batch resends collapse here; cross-batch ones at the guard
-        b = (
+        cached = (
             batch.select(*flat_cols, "event")
             .dropDuplicates(["exec_name"])
             .persist()
@@ -449,7 +449,7 @@ def run_pipeline(
             # exactly-once contents (the crawl_stream posture applied
             # to the event pipeline)
             b = replay_guard(
-                b, ledger_other_batches(spark, out_dir, key)
+                cached, ledger_other_batches(spark, out_dir, key)
             )
 
             ok = b.filter(F.col("route") == ROUTE_OK)
@@ -465,36 +465,45 @@ def run_pipeline(
                         out, out_events, key,
                         writer=f"stage_{event_name}",
                     )
-            unstaged = ok.filter(
-                ~F.col("event_name").isin(*stages.keys())
-                if stages
-                else F.lit(True)
+            unstaged = F.col("route") == ROUTE_OK
+            if stages:
+                unstaged &= ~F.col("event_name").isin(*stages.keys())
+            retry = F.col("route") == ROUTE_RETRY
+            dead = F.col("route").isin(ROUTE_DEAD_LETTER, ROUTE_INVALID)
+            # ONE small action: the sinks that get rows, and the dead rows
+            # the alert needs — a sink no row routes to is not written
+            sink = (
+                F.when(dead, "dlq").when(retry, "retries")
+                .when(unstaged, "forward")
             )
-            # forward pass-through (tre_forward parity): unhandled ok events
-            # republish with their attribute columns
-            write_batch_partition(
-                unstaged.select(*flat_cols), out_events, key,
-                writer="forward",
+            summary = dict(
+                b.filter(sink.isNotNull())
+                .groupBy(sink.alias("sink"))
+                .agg(F.collect_list(F.when(dead, F.struct(
+                    "exec_name", "event_name", "reference", "route", "errors"
+                ))))
+                .collect()
             )
 
-            # T4: re-queued events carry the INCREMENTED counter (column +
-            # embedded payload) so the retry loop converges to dead-letter
-            write_batch_partition(
-                bump_retry_counter(
-                    b.filter(F.col("route") == ROUTE_RETRY)
-                ).select(*flat_cols),
-                out_retries, key,
-            )
-
-            dead = b.filter(
-                F.col("route").isin(ROUTE_DEAD_LETTER, ROUTE_INVALID)
-            )
-            dead_rows = dead.select(
-                "exec_name", "event_name", "reference", "route", "errors"
-            ).collect()
+            if "forward" in summary:
+                # forward pass-through (tre_forward parity): unhandled ok
+                # events republish with their attribute columns
+                write_batch_partition(
+                    b.filter(unstaged).select(*flat_cols), out_events, key,
+                    writer="forward",
+                )
+            if "retries" in summary:
+                # T4: re-queued events carry the INCREMENTED counter
+                # (column + embedded payload) so the retry loop
+                # converges to dead-letter
+                write_batch_partition(
+                    bump_retry_counter(b.filter(retry)).select(*flat_cols),
+                    out_retries, key,
+                )
+            dead_rows = summary.get("dlq")
             if dead_rows:
                 write_batch_partition(
-                    dead.select(*flat_cols), out_dlq, key
+                    b.filter(dead).select(*flat_cols), out_dlq, key
                 )
                 if alert is not None:
                     # alerting stays at-least-once across a crash
@@ -508,7 +517,7 @@ def run_pipeline(
             if on_batch_complete is not None:
                 on_batch_complete(batch_id)
         finally:
-            b.unpersist()
+            cached.unpersist()
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

@@ -487,7 +487,19 @@ def test_bagit_to_dri_sip_batch_matches_sequential(spark, tmp_path):
     ctx_bat, ev_bat = _validated_events(spark, tmp_path, "bat", refs)
 
     sequential = [bagit_to_dri_sip(spark, e, ctx_seq) for e in ev_seq]
-    batch = bagit_to_dri_sip_batch(spark, ev_bat, ctx_bat)
+    batch = _run_in_job_group(
+        spark,
+        "sip-batch-stage",
+        lambda: bagit_to_dri_sip_batch(spark, ev_bat, ctx_bat),
+    )
+    # each CSV rendered once, each archive packed once and sip/ never
+    # re-read is 15 jobs for 2 consignments; a second render or pack
+    # goes past the bound. A bound, not an exact count: AQE splits
+    # actions into a varying number of jobs
+    n_jobs = len(
+        spark.sparkContext.statusTracker().getJobIdsForGroup("sip-batch-stage")
+    )
+    assert n_jobs <= 17, f"SIP batch ran {n_jobs} jobs"
 
     assert [e["producer"]["event-name"] for e in batch] == [
         "dri-preingest-sip-available"
@@ -519,6 +531,14 @@ def test_bagit_to_dri_sip_batch_matches_sequential(spark, tmp_path):
         ):
             digest = sha(open(url, "rb").read())
             assert open(side).read().startswith(digest + "  ")
+        # the sip/ files and the packed members come from one render
+        sip_dir = p_bat["s3-folder-url"].replace(
+            ctx_bat.out_root, ctx_bat.store_root
+        ).rsplit("/", 1)[0]
+        for csv_name in ("metadata.csv", "closure.csv"):
+            [member] = [n for n in tar_bat if n.endswith("/" + csv_name)]
+            with open(f"{sip_dir}/{member}", "rb") as f:
+                assert f.read() == tar_bat[member], member
         assert os.path.basename(p_bat["s3-folder-url"]).startswith("MOCKA101Y26TB")
 
 

@@ -71,7 +71,9 @@ def test_ok_path_dispatch(spark, tmp_path):
     state: one availableNow call over one file runs one micro-batch and
     the checkpoint has no state/ dir; on the same checkpoint a message
     stamped an hour before an earlier one still routes, and a verbatim
-    resend in a later file is dropped by the ledger."""
+    resend in a later file is dropped by the ledger. A sink no row
+    routes to is not written, and no batch stays cached."""
+    cached_before = spark.sparkContext._jsc.getPersistentRDDs().size()
     aaa = _event("TDR-2023-AAA")
     indir = tmp_path / "in"
     _write_events(indir, [aaa, _event("TDR-2023-BBB")])
@@ -101,6 +103,10 @@ def test_ok_path_dispatch(spark, tmp_path):
     assert sorted(r["reference"] for r in got) == [
         "TDR-2023-AAA", "TDR-2023-BBB", "TDR-2023-LATE"
     ]
+    assert not (out / "retries").exists()
+    assert not (out / "dlq").exists()
+    # <=: the context cleaner may drop other tests' RDDs meanwhile
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() <= cached_before
 
 
 def test_duplicate_resend_dedup(spark, tmp_path):
