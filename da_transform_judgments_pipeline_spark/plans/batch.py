@@ -36,6 +36,7 @@ plus the manifest-sized validated-file lists the output events must carry
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
 import time
@@ -701,24 +702,6 @@ EVENT_SIP_AVAILABLE = "dri-preingest-sip-available"
 EVENT_SIP_ERROR = "dri-preingest-sip-error"
 
 
-def _file_and_sidecar(name, side_name, content, listed_name):
-    """Column ``f``: explode of one row's file and its ``.sha256`` sidecar
-    (``<sha256>  <listed_name>``), both from ONE evaluation of the row —
-    a union of two selects would evaluate a grouped UDF once per
-    branch."""
-    return F.explode(
-        F.array(
-            F.struct(name.alias("name"), content.alias("content")),
-            F.struct(
-                side_name.alias("name"),
-                F.concat(F.sha2(content, 256), F.lit("  "), listed_name, F.lit("\n"))
-                .cast("binary")
-                .alias("content"),
-            ),
-        )
-    ).alias("f")
-
-
 def bagit_to_dri_sip_batch(
     spark: SparkSession, events: list[dict], ctx: StageContext
 ) -> list[dict]:
@@ -741,22 +724,23 @@ def bagit_to_dri_sip_batch(
        consignment whose CSV carries the same column names in a
        different order fails the read loudly instead of silently
        landing values in the wrong columns.
-    3. ONE plan renders every consignment's metadata.csv + closure.csv
-       (dri_metadata_keyed / dri_closure_keyed over a broadcast config
-       dim; per-group CSV text via render_csv_by_key — byte-identical to
-       the sequential render), each CSV exactly once.
-    4. Each rendered row is exploded into its CSV file and its .sha256
-       sidecar (sha2 over the in-flight CSV text — the same bytes the
-       file holds); with the schema files that is one small persisted
-       frame, and ONE distributed write lands it under each
-       ``{root}/sip/``.
-    5. ONE tar_gz_pack call packs every SIP from the bagit ``data/`` scan
-       plus that same frame — ``sip/`` is never re-read; its members are
-       named by their ``*_IN_SIP`` keys and stamped with one driver-side
-       write time (applyInPandas groups by archive — one task per
-       consignment's tar.gz, the same per-archive memory model as the
-       sequential stage). One distributed write lands each archive + its
-       sidecar under ``ctx.out_root`` from that single pack evaluation.
+    3. ONE plan gives every consignment's metadata.csv + closure.csv
+       rows (dri_metadata_keyed / dri_closure_keyed over a broadcast
+       config dim), each as (consignment, kind, _row_order, cells).
+    4. Those rows are cogrouped by consignment with ONE scan of the
+       bagit ``data/`` dirs, and ONE grouped call per consignment builds
+       its whole SIP: both CSVs (:func:`..sources.sinks.csv_text`, the
+       sequential render's writer; header-only when the consignment has
+       no file-metadata rows), their .sha256 sidecars, the schema files,
+       and the tar.gz of those plus the ``data/`` files
+       (:func:`..sources.archive.tar_gz_bytes`, the sequential pack's
+       writer; the SIP files are named by their ``*_IN_SIP`` keys and
+       stamped with one driver-side write time) with its own sidecar.
+       One task holds one consignment's archive — the sequential
+       stage's per-archive memory model.
+    5. ONE distributed write lands the SIP files under each
+       ``{root}/sip/`` and each archive + sidecar under
+       ``ctx.out_root``.
 
     Note on error isolation: after config build, the remaining work is
     one fused job set — an engine-side strict-enum error (dri_sip P1
@@ -771,9 +755,9 @@ def bagit_to_dri_sip_batch(
         dri_metadata_keyed,
     )
     from ..schemas import DRI_CLOSURE_COLUMNS, DRI_METADATA_COLUMNS
-    from ..sources.archive import tar_gz_pack
+    from ..sources.archive import tar_gz_bytes
     from ..sources.bagit import FILE_METADATA_COLUMNS_V11
-    from ..sources.sinks import render_csv_by_key
+    from ..sources.sinks import csv_text
     from .stages import _dri_schema_text
 
     plans: list[dict] = []
@@ -888,125 +872,97 @@ def bagit_to_dri_sip_batch(
         " identifier_prefix string",
     )
 
-    # 3) every consignment's CSV text: one render per CSV
-    rendered = render_csv_by_key(
-        dri_metadata_keyed(fm, manifest, config_df),
-        "consignment",
+    # 3) every consignment's DRI rows, each CSV row as an array of cells
+    def dri_rows(df, kind, columns):
+        return df.select(
+            "consignment",
+            F.lit(kind).alias("kind"),
+            "_row_order",
+            F.array(*[F.col(c).cast("string") for c in columns]).alias("cells"),
+        )
+
+    rows = dri_rows(
+        dri_metadata_keyed(fm, manifest, config_df), "METADATA",
         DRI_METADATA_COLUMNS,
-    ).withColumn("kind", F.lit("METADATA")).unionByName(
-        render_csv_by_key(
-            dri_closure_keyed(fm, config_df), "consignment", DRI_CLOSURE_COLUMNS
-        ).withColumn("kind", F.lit("CLOSURE"))
+    ).unionByName(
+        dri_rows(dri_closure_keyed(fm, config_df), "CLOSURE", DRI_CLOSURE_COLUMNS)
+    )
+    data = read_file_catalog(
+        spark, [f"{store}/{p['root']}/data" for p in live]
+    ).select(
+        root_expr_cases.alias("consignment"),
+        "path",
+        "content",
+        F.unix_timestamp("modificationTime").alias("mtime"),
     )
 
     if len({p["dc"]["BATCH"] for p in live}) != len(live):
         raise ValueError("duplicate SIP batch names in one batch")
-    # 4) SIP metadata files: each CSV row explodes into its file and its
-    # sidecar; with the schema files that is (consignment, name, content)
-    csv_names = local_df(spark, 
-        [
-            (
-                p["root"],
-                kind,
-                p["dc"][f"{kind}_IN_SIP"],
-                p["dc"][f"{kind}_CHECKSUM_IN_SIP"],
-                p["dc"][kind],
-            )
-            for p in live
-            for kind in ("METADATA", "CLOSURE")
-        ],
-        "consignment string, kind string, key string, side_key string,"
-        " file_name string",
-    )
-    schema_rows = [
-        (
-            p["root"],
-            p["dc"][dest_key],
-            _dri_schema_text(schema_name).encode(),
-        )
-        for p in live
+    # 4) one grouped call per consignment builds every file of its SIP
+    dcs = {p["root"]: p["dc"] for p in live}
+    schema_texts = {
+        dest_key: _dri_schema_text(schema_name).encode()
         for schema_name, dest_key in (
             ("metadata-schema.txt", "METADATA_SCHEMA_IN_SIP"),
             ("closure-schema.txt", "CLOSURE_SCHEMA_IN_SIP"),
         )
-    ]
-    # read twice: by the sip/ write and by the pack
-    sip_files = rendered.join(
-        F.broadcast(csv_names), ["consignment", "kind"]
-    ).select(
-        "consignment",
-        _file_and_sidecar(
-            F.col("key"), F.col("side_key"), F.col("csv").cast("binary"),
-            F.col("file_name"),
-        ),
-    ).select("consignment", "f.*").unionByName(
-        local_df(spark, schema_rows, "consignment string, name string, content binary")
-    ).persist()
-    try:
-        # the tar mtime of the in-flight members: one write time
-        written_at = int(time.time())
-        _write_members(
-            sip_files.select(
-                F.concat("consignment", F.lit("/sip/"), "name").alias("name"),
-                "content",
-            ),
-            store,
+    }
+    # absolute names, written under "/": the store and the out root may
+    # be any two roots
+    store_dir, out_root = os.path.abspath(store), os.path.abspath(ctx.out_root)
+    # the tar mtime of the in-flight SIP files: one write time
+    written_at = int(time.time())
+
+    def build_sip(key, dri, files):
+        import pandas as pd
+
+        root = key[0]
+        dc = dcs[root]
+        sip = {}
+        for kind, columns in (
+            ("METADATA", DRI_METADATA_COLUMNS),
+            ("CLOSURE", DRI_CLOSURE_COLUMNS),
+        ):
+            cells = dri[dri["kind"] == kind].sort_values("_row_order")["cells"]
+            text = csv_text(columns, cells).encode()
+            sip[dc[f"{kind}_IN_SIP"]] = text
+            sip[dc[f"{kind}_CHECKSUM_IN_SIP"]] = (
+                f"{hashlib.sha256(text).hexdigest()}  {dc[kind]}\n".encode()
+            )
+        for dest_key, text in schema_texts.items():
+            sip[dc[dest_key]] = text
+        # keyed and packed by source name, tar_gz_pack's order: the SIP
+        # files' keys, the data/ files' paths; data/ files keep their
+        # own mtimes
+        members = {n: (n, c, written_at) for n, c in sip.items()}
+        data_dir = f"file:{store}/{root}/data/"
+        for path, content, mtime in zip(
+            files["path"], files["content"], files["mtime"]
+        ):
+            name = dc["INTERNAL_PREFIX"] + path.removeprefix(data_dir)
+            members[path] = (name, content, mtime)
+        archive = dc["BATCH"] + ".tar.gz"
+        blob, _ = tar_gz_bytes(archive, [members[k] for k in sorted(members)])
+        out_dir = f"{out_root}/{root}/sip/"
+        return pd.DataFrame(
+            [(f"{store_dir}/{root}/sip/{n}", c) for n, c in sip.items()]
+            + [
+                (out_dir + archive, blob),
+                (
+                    out_dir + archive + ".sha256",
+                    f"{hashlib.sha256(blob).hexdigest()}  {archive}\n".encode(),
+                ),
+            ],
+            columns=["name", "content"],
         )
 
-        # 5) one pack of data/ + the in-flight SIP files per archive
-        pack_dim = local_df(spark, 
-            [
-                (
-                    p["root"],
-                    p["dc"]["BATCH"] + ".tar.gz",
-                    p["dc"]["INTERNAL_PREFIX"],
-                )
-                for p in live
-            ],
-            "consignment string, archive string, internal_prefix string",
-        )
-        data_members = read_file_catalog(
-            spark, [f"{store}/{p['root']}/data" for p in live]
-        ).withColumn("consignment", root_expr_cases).join(
-            F.broadcast(pack_dim), "consignment"
-        ).select(
-            "archive",
-            F.col("path").alias("name"),
-            "content",
-            F.unix_timestamp("modificationTime").alias("mtime"),
-            F.concat(
-                F.lit(f"file:{store}/"), F.col("consignment"), F.lit("/data/")
-            ).alias("rm"),
-            F.col("internal_prefix").alias("add"),
-        )
-        # SIP names already carry the internal prefix: no substitution
-        meta_members = sip_files.join(
-            F.broadcast(pack_dim), "consignment"
-        ).select(
-            "archive",
-            "name",
-            "content",
-            F.lit(written_at).cast("long").alias("mtime"),
-            F.lit("").alias("rm"),
-            F.lit("").alias("add"),
-        )
-        packed = tar_gz_pack(
-            data_members.unionByName(meta_members),
-            remove_prefix_col="rm",
-            add_prefix_col="add",
-        )
-        zip_key = F.concat("consignment", F.lit("/sip/"), "archive")
-        _write_members(
-            packed.join(F.broadcast(pack_dim), "archive").select(
-                _file_and_sidecar(
-                    zip_key, F.concat(zip_key, F.lit(".sha256")),
-                    F.col("content"), F.col("archive"),
-                )
-            ).select("f.*"),
-            ctx.out_root,
-        )
-    finally:
-        sip_files.unpersist()
+    # 5) one write of every SIP file, archive and sidecar
+    _write_members(
+        rows.groupBy("consignment")
+        .cogroup(data.groupBy("consignment"))
+        .applyInPandas(build_sip, schema="name string, content binary"),
+        "/",
+    )
 
     for p in live:
         zip_key = f"{p['root']}/sip/{p['dc']['BATCH']}.tar.gz"

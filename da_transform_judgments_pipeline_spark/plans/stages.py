@@ -372,7 +372,7 @@ def _write_members(members, dest_root: str) -> list[str]:
     rows under dest_root (shared FS / object store) and yields their
     names, so the write and the returned name list are ONE Spark action
     over ``members`` — no persist, no second pass."""
-    dest_root = dest_root.rstrip("/")
+    dest_root = dest_root.rstrip("/") or "/"
 
     def write_partition(rows):
         for row in rows:

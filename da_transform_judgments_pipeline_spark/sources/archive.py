@@ -16,6 +16,7 @@ executor (same memory contract as the reference's Lambda bound).
 
 from __future__ import annotations
 
+import gzip
 import io
 import tarfile
 from typing import Iterator
@@ -191,6 +192,42 @@ def untar(
     return src.mapInPandas(expand, schema=schema)
 
 
+def tar_gz_bytes(
+    archive: str,
+    members: list[tuple],
+    max_archive_bytes: int | None = DEFAULT_MAX_ARCHIVE_BYTES,
+) -> tuple[bytes, list[dict]]:
+    """The one tar.gz writer: pack ``members`` — (name, content, mtime)
+    tuples, in the order given; an mtime of None or NaN keeps tarfile's
+    0 — into one archive's bytes, and return them with the (name, size)
+    items. ``archive`` names the archive in the size-guard error."""
+    total = sum(len(content) for _, content, _ in members)
+    _check_size(
+        f"archive {archive!r} ({len(members)} members)",
+        total,
+        max_archive_bytes,
+    )
+    buf = io.BytesIO()
+    items = []
+    # PIN the gzip header timestamp: mode="w:gz" stamps the CURRENT
+    # time into the gzip header, so a task retry or a replayed batch
+    # would re-pack the same members into different bytes.
+    # mtime=0 makes the pack a pure function of its inputs (the
+    # build_warc_gz/_gzip_member convention).
+    gz = gzip.GzipFile(fileobj=buf, mode="wb", mtime=0)
+    with tarfile.open(fileobj=gz, mode="w") as tf:
+        for name, content, mtime in members:
+            data = bytes(content)
+            info = tarfile.TarInfo(name=name)
+            info.size = len(data)
+            if mtime is not None and mtime == mtime:
+                info.mtime = int(mtime)
+            tf.addfile(info, io.BytesIO(data))
+            items.append({"name": name, "size": len(data)})
+    gz.close()  # flush the gzip trailer before reading the buffer
+    return buf.getvalue(), items
+
+
 def tar_gz_pack(
     members: DataFrame,
     archive_col: str = "archive",
@@ -261,47 +298,20 @@ def tar_gz_pack(
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(sort_key, kind="stable")
-        total = int(pdf["content"].map(len).sum())
-        _check_size(
-            f"archive {pdf['archive'].iloc[0]!r} ({len(pdf)} members)",
-            total,
-            max_archive_bytes,
-        )
-        buf = io.BytesIO()
-        items = []
-        # PIN the gzip header timestamp: mode="w:gz" stamps the CURRENT
-        # time into the gzip header, so a task retry or a replayed batch
-        # would re-pack the same members into different bytes.
-        # mtime=0 makes the pack a pure function of its inputs (the
-        # build_warc_gz/_gzip_member convention).
-        import gzip as _gzip
-
-        gz = _gzip.GzipFile(fileobj=buf, mode="wb", mtime=0)
-        with tarfile.open(fileobj=gz, mode="w") as tf:
-            for rec in pdf.to_dict("records"):
-                name = rec["name"]
-                rm = rec.get("rmprefix")
-                if rm and name.startswith(rm):
-                    name = name[len(rm):]
-                add = rec.get("addprefix")
-                if add:
-                    name = add + name
-                name = prefix + name
-                data = bytes(rec["content"])
-                info = tarfile.TarInfo(name=name)
-                info.size = len(data)
-                mtime = rec.get("mtime")
-                if mtime is not None and mtime == mtime:
-                    info.mtime = int(mtime)
-                tf.addfile(info, io.BytesIO(data))
-                items.append({"name": name, "size": len(data)})
-        gz.close()  # flush the gzip trailer before reading the buffer
+        members = []
+        for rec in pdf.to_dict("records"):
+            name = rec["name"]
+            rm = rec.get("rmprefix")
+            if rm and name.startswith(rm):
+                name = name[len(rm):]
+            add = rec.get("addprefix")
+            if add:
+                name = add + name
+            members.append((prefix + name, rec["content"], rec.get("mtime")))
+        archive = pdf["archive"].iloc[0]
+        blob, items = tar_gz_bytes(archive, members, max_archive_bytes)
         return pd.DataFrame(
-            {
-                "archive": [pdf["archive"].iloc[0]],
-                "content": [buf.getvalue()],
-                "items": [items],
-            }
+            {"archive": [archive], "content": [blob], "items": [items]}
         )
 
     return src.groupBy("archive").applyInPandas(pack, schema=out_schema)

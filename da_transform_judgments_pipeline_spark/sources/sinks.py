@@ -2,8 +2,11 @@
 
 Single-file renders exist for parity with the reference's one-object outputs
 (metadata.csv / closure.csv / output-message.json); at scale the same DFs
-write partitioned parquet/csv via the normal writer. The errorifexists guard
-is the reference's overwrite protection (object_lib.py:196-209).
+write partitioned parquet/csv via the normal writer. :func:`csv_text` is the
+one CSV writer: :func:`render_csv` feeds it a DataFrame collected through the
+driver, the batched SIP build (plans.batch) one consignment's rows inside a
+grouped task. The errorifexists guard is the reference's overwrite
+protection (object_lib.py:196-209).
 """
 
 from __future__ import annotations
@@ -46,60 +49,29 @@ def write_single_csv(
     write_single_text(text, path, allow_overwrite=allow_overwrite)
 
 
-def render_csv(df: DataFrame, order_by: list[str] | None = None) -> str:
+def csv_text(columns: list[str], rows) -> str:
     """CSV string with csv.QUOTE_MINIMAL + '\\n' line terminator, matching
-    the reference's DictWriter byte-for-byte."""
+    the reference's DictWriter byte-for-byte: a header of ``columns``,
+    then one line per row of ``rows`` (value sequences in column order;
+    None renders as ''). The one CSV writer behind :func:`render_csv`
+    and the batched SIP build."""
     import csv
     import io
 
-    if order_by:
-        df = df.orderBy(*order_by)
-    columns = df.columns
     out = io.StringIO()
     writer = csv.writer(out, lineterminator="\n")
     writer.writerow(columns)
-    for row in df.toLocalIterator():
-        writer.writerow(["" if row[c] is None else row[c] for c in columns])
+    for row in rows:
+        writer.writerow(["" if v is None else v for v in row])
     return out.getvalue()
 
 
-def render_csv_by_key(
-    df: DataFrame,
-    key_col: str,
-    columns: list[str],
-    order_col: str = "_row_order",
-) -> DataFrame:
-    """ENGINE-side per-group CSV rendering → one (key, csv) row per key,
-    byte-identical to :func:`render_csv` over each group (same csv.writer,
-    QUOTE_MINIMAL, '\\n' terminator). The batch counterpart of the
-    per-consignment render: N consignments' metadata/closure CSVs come out
-    of ONE applyInPandas job instead of N driver-side toLocalIterator
-    loops. Each group is one consignment's manifest-sized metadata —
-    thousands of rows, well inside a task."""
-    import csv
-    import io
-
-    import pandas as pd
-
-    cols = [key_col] + ([order_col] if order_col in df.columns else []) + [
-        c for c in columns if c not in (key_col, order_col)
-    ]
-    src = df.select(*cols)
-
-    def render(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf[key_col].iloc[0]
-        if order_col in pdf.columns:
-            pdf = pdf.sort_values(order_col)
-        out = io.StringIO()
-        writer = csv.writer(out, lineterminator="\n")
-        writer.writerow(columns)
-        for rec in pdf[columns].itertuples(index=False, name=None):
-            writer.writerow(["" if v is None else v for v in rec])
-        return pd.DataFrame({key_col: [key], "csv": [out.getvalue()]})
-
-    return src.groupBy(key_col).applyInPandas(
-        render, schema=f"{key_col} string, csv string"
-    )
+def render_csv(df: DataFrame, order_by: list[str] | None = None) -> str:
+    """:func:`csv_text` over a (small) DataFrame's rows, collected
+    through the driver."""
+    if order_by:
+        df = df.orderBy(*order_by)
+    return csv_text(df.columns, df.toLocalIterator())
 
 
 def write_sorted_parquet(

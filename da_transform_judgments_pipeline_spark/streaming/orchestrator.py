@@ -434,24 +434,20 @@ def run_pipeline(
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         key = batch_key(checkpoint_dir, batch_id)
-        # T3: in-batch resends collapse here; cross-batch ones at the guard
-        cached = (
-            batch.select(*flat_cols, "event")
-            .dropDuplicates(["exec_name"])
-            .persist()
-        )
+        # T3: in-batch resends collapse here; cross-batch ones at the
+        # T10 replay guard MINUS this batch's own ledger partition
+        # (lineage-qualified key): a crashed batch always replays in
+        # full, every sink below REPLACES its partition, and a
+        # cross-checkpoint resend carries a different lineage so it
+        # still anti-joins away — each crash window converges to
+        # exactly-once contents (the crawl_stream posture applied to
+        # the event pipeline). The GUARDED batch is persisted: every
+        # action below reads it, none re-runs the ledger read and join
+        b = replay_guard(
+            batch.select(*flat_cols, "event").dropDuplicates(["exec_name"]),
+            ledger_other_batches(spark, out_dir, key),
+        ).persist()
         try:
-            # T10 replay guard MINUS this batch's own ledger partition
-            # (lineage-qualified key): a crashed batch always replays
-            # in full, every sink below REPLACES its partition, and a
-            # cross-checkpoint resend carries a different lineage so it
-            # still anti-joins away — each crash window converges to
-            # exactly-once contents (the crawl_stream posture applied
-            # to the event pipeline)
-            b = replay_guard(
-                cached, ledger_other_batches(spark, out_dir, key)
-            )
-
             ok = b.filter(F.col("route") == ROUTE_OK)
             for event_name, stage_fn in stages.items():
                 sub = ok.filter(F.col("event_name") == event_name)
@@ -517,7 +513,7 @@ def run_pipeline(
             if on_batch_complete is not None:
                 on_batch_complete(batch_id)
         finally:
-            cached.unpersist()
+            b.unpersist()
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

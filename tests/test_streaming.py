@@ -72,7 +72,8 @@ def test_ok_path_dispatch(spark, tmp_path):
     the checkpoint has no state/ dir; on the same checkpoint a message
     stamped an hour before an earlier one still routes, and a verbatim
     resend in a later file is dropped by the ledger. A sink no row
-    routes to is not written, and no batch stays cached."""
+    routes to is not written, the batch's actions share one cached
+    guarded batch, and no batch stays cached."""
     cached_before = spark.sparkContext._jsc.getPersistentRDDs().size()
     aaa = _event("TDR-2023-AAA")
     indir = tmp_path / "in"
@@ -98,7 +99,14 @@ def test_ok_path_dispatch(spark, tmp_path):
     late = _event("TDR-2023-LATE")
     late["timestamp"] = aaa["timestamp"] - 3600 * 10**9
     _write_events(indir, [late, aaa], name="later.jsonl")
-    call()
+    q = call()
+    # every action reads the one cached guarded batch (8 jobs); actions
+    # that each re-ran the ledger read and anti-join go past the bound.
+    # A bound, not an exact count: AQE varies the job split
+    n_jobs = len(
+        spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    )
+    assert n_jobs <= 9, f"second call ran {n_jobs} jobs"
     got = _read(spark, out / "events").collect()
     assert sorted(r["reference"] for r in got) == [
         "TDR-2023-AAA", "TDR-2023-BBB", "TDR-2023-LATE"
