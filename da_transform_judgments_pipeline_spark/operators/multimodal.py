@@ -112,7 +112,7 @@ def extract_features(
     path keeps the plumbing testable on arbitrary bytes.
 
     ``on_error="report"`` isolates undecodable blobs instead of failing
-    the job (same contract as :func:`..sources.archive.untar`): an
+    the job (same contract as :func:`..sources.archive.unzip`): an
     ``error`` column is appended (NULL on success), a failed decode
     yields its row with feature=NULL and the exception message — one
     corrupt object must not fail a million-object batch.
@@ -231,7 +231,7 @@ def audio_clip_features(media: DataFrame, on_error: str = "raise") -> DataFrame:
 
     ``on_error="report"`` appends an ``error`` column (NULL on success)
     and emits a NULL-feature row for each undecodable clip instead of
-    failing the job — the untar report contract."""
+    failing the job — the unzip report contract."""
     report = _check_on_error(on_error)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -284,7 +284,7 @@ def video_frame_features(media: DataFrame, on_error: str = "raise") -> DataFrame
 
     ``on_error="report"`` appends an ``error`` column (NULL on success);
     an undecodable blob yields ONE row (frame_no NULL, error=<message>)
-    and every healthy video's frames flow through — the untar report
+    and every healthy video's frames flow through — the unzip report
     contract, so one corrupt object cannot fail a large batch."""
     report = _check_on_error(on_error)
 

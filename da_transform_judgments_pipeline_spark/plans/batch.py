@@ -11,44 +11,45 @@ This module is the Spark-native batch twin: given ALL pending
 ``bagit-received`` events, it
 
 1. reads every consignment's archive in ONE binaryFile scan,
-2. untars them all in ONE ``mapInPandas`` fan-out (one task per archive),
-3. writes every member in ONE distributed ``foreachPartition`` pass,
-4. parses every tag/data manifest from the already-in-flight member rows
-   (no re-read of what we just wrote),
-5. verifies every checksum with ONE join (the J2 machinery, keyed by
-   (consignment, file) instead of (file)),
-6. reconciles every consignment's counts in ONE aggregation (A3/J4),
-7. re-lists the store ONCE for the write-back audit count,
+2. hands each archive to ONE Python call in ONE ``mapInPandas`` pass,
+   which untars it, writes every member to the store, hashes every
+   member, parses both manifests from the members in hand (no re-read
+   of what it just wrote), and applies the checksum and count checks,
+3. collects ONE row per consignment (its first error, or the manifests'
+   file lists),
 
 then emits one ``bagit-validated`` / ``bagit-validation-error`` event per
 consignment with the same parameters and error strings as the sequential
 stage (equivalence is pytest-asserted against
 :func:`..plans.stages.validate_bagit_files` on the same store; the
 validated-file lists are sorted rather than manifest-line-ordered).
+:func:`batch_validation_report` is the same checks as one relational
+plan over member rows, the DuckDB-oracle-checked reference.
 
-Scale shape: per-consignment work never funnels through one task — untar is
-one task per archive, checksum sha2 is map-side over the member rows, the
-manifest side of the verification join is KBs per consignment (broadcast),
-and the only driver-side materialization is the N-row per-consignment report
-plus the manifest-sized validated-file lists the output events must carry
-(the same lists the reference's events carry — control-plane by contract).
+Scale shape: per-consignment work never funnels through one task — each
+archive is one Python call, and a task's memory holds one archive at a
+time, as untar's does; the only driver-side materialization is the N-row
+result plus the manifest-sized validated-file lists the output events must
+carry (the same lists the reference's events carry — control-plane by
+contract).
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
-import re
 import time
+from typing import Iterator
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.validation import STATUS_OK
 from ..session import local_df
-from ..sources.archive import untar
+from ..sources.archive import untar_blob
 from ..sources.catalog import read_file_catalog
-from ..sources.manifest import manifest_from_lines
+from ..sources.manifest import CHECKSUM_WIDTH, manifest_from_lines
 from .events import latest_uuid, validate_event
 from .stages import (
     EVENT_BAGIT_AVAILABLE,
@@ -56,6 +57,8 @@ from .stages import (
     EVENT_BAGIT_RECEIVED,
     EVENT_BAGIT_VALIDATED,
     StageContext,
+    _n_listed,
+    _write_member,
     _write_members,
 )
 
@@ -122,9 +125,11 @@ def batch_validation_report(
     - audit counts: ``n_root_listed``/``n_data_listed`` (manifest entries),
       ``n_root_bad``/``n_data_bad``, ``n_extracted``/``n_data_extracted``.
 
-    The store re-listing audit (sequential stage's third count check) needs
-    the filesystem, not these rows — :func:`validate_bagit_files_batch`
-    runs it; this report is the pure relational core, oracle-checkable.
+    The store audit (the sequential stage's third count check) needs the
+    filesystem, not these rows; this report is the pure relational core,
+    oracle-checkable (registry query b01 and the batch, plan and property
+    tests run it; :func:`validate_bagit_files_batch` applies the same
+    checks per archive in Python).
 
     Shape: checksum sha2 is map-side; the verification join's manifest side
     is per-consignment KBs (broadcast); the rollup is one partial-agg
@@ -275,11 +280,97 @@ def batch_validation_report(
     )
 
 
+def _manifest_entries(text: str) -> list[tuple[str, str]]:
+    """(checksum, file) per manifest line, by the rule of
+    :func:`..sources.manifest.manifest_from_lines` (Spark's ``trim``
+    strips spaces only)."""
+    return [
+        (line[:CHECKSUM_WIDTH].strip(" ").lower(), line[CHECKSUM_WIDTH:].strip(" "))
+        for line in text.split("\n")
+        if line.strip(" ")
+    ]
+
+
+def _no_members_error(archive_path: str) -> str:
+    return f'Object "{archive_path}" produced no members'
+
+
+def _check_bagit_archive(
+    archive: str, blob: bytes, store: str, plan: dict
+) -> tuple[str | None, list[str], list[str]]:
+    """One consignment's archive → (error, root files, data files): the
+    sequential stage's untar-in-place, checksum and count checks, in its
+    order and with its error strings, on the bytes in hand. Members are
+    written under ``{store}/{out_prefix}/`` and hashed; the manifests
+    are read from the members under the unpacked root. The first bad
+    tagmanifest entry wins, then the first bad data-manifest entry (bad
+    = missing or mismatched, by file; the problem count is that
+    manifest's), then the total count (strays outside the root count
+    too), the data count and the store audit (:func:`.stages._n_listed`)."""
+    archive_path = plan["archive_path"]
+    prefix = plan["out_prefix"]
+    try:
+        members = untar_blob(archive, blob)
+    except Exception as e:
+        return f'Unpack failed for "{archive_path}": {type(e).__name__}: {e}', [], []
+
+    keys, rel_names, digests, manifests = [], [], {}, {}
+    base = plan["unpacked_root"].rsplit("/", 1)[-1] + "/"
+    for m in members:
+        key = f"{prefix}/{m['name']}" if prefix else m["name"]
+        _write_member(store, key, m["content"])
+        keys.append(key)
+        if m["name"].startswith(base):
+            rel = m["name"][len(base):]
+            rel_names.append(rel)
+            digests[rel] = hashlib.sha256(m["content"]).hexdigest()
+            if rel in (TAGMANIFEST, DATA_MANIFEST):
+                manifests[rel] = bytes(m["content"]).decode("utf-8", "replace")
+    if not rel_names:
+        return _no_members_error(archive_path), [], []
+
+    root_entries, data_entries = (
+        _manifest_entries(manifests.get(name, ""))
+        for name in (TAGMANIFEST, DATA_MANIFEST)
+    )
+    for entries in (root_entries, data_entries):
+        bad = [(f, c, digests.get(f)) for c, f in entries if digests.get(f) != c]
+        if bad:
+            file, expected, actual = min(bad)
+            return (
+                f'Object "{plan["unpacked_root"]}/{file}" checksum "{actual}" '
+                f'does not match expected checksum "{expected}" '
+                f"({len(bad)} problem file(s) total)"
+            ), [], []
+    root_files = [f for _, f in root_entries]
+    data_files = [f for _, f in data_entries]
+    n_all, n_data = len(members), sum(n.startswith("data/") for n in rel_names)
+    manifests_total = 1 + len(root_files) + len(data_files)
+    if n_all != manifests_total:
+        error = (
+            f"Incorrect total file count; {manifests_total} in manifest, "
+            f"but {n_all} found"
+        )
+    elif len(data_files) != n_data:
+        error = (
+            f"Incorrect data file count; {len(data_files)} in manifest but "
+            f"{n_data} found"
+        )
+    elif (n_listed := _n_listed(store, keys, prefix)) != n_all:
+        error = (
+            f"Incorrect data file count; {n_all} extracted but {n_listed} "
+            "found"
+        )
+    else:
+        return None, root_files, data_files
+    return error, [], []
+
+
 def validate_bagit_files_batch(
     spark: SparkSession, events: list[dict], ctx: StageContext
 ) -> list[dict]:
     """bagit-received* → (bagit-validated | bagit-validation-error)* —
-    ALL consignments in one set of Spark jobs.
+    ALL consignments in one Spark job.
 
     Returns one output event per input event, in input order, with the
     same parameters + error strings as running
@@ -289,10 +380,13 @@ def validate_bagit_files_batch(
     the reference's (type, reference, retry) grouping — so duplicate
     references in one batch stay distinct.
 
-    Driver-side cost is O(batch): the N-row report, the manifest-sized
-    validated-file lists the events must carry, and the extracted-name
-    lists per consignment. Data-proportional work (untar, sha2, joins,
-    count rollups) is all executor-side, one job each for the whole batch.
+    ONE binaryFile scan reads every archive, ONE ``mapInPandas`` hands
+    each archive to one :func:`_check_bagit_archive` call (untar, write,
+    checksum, count), and ONE ``collect`` returns a row per consignment:
+    (archive, error, root files, data files). An archive that won't
+    untar becomes its own consignment's error; any other failure fails
+    the batch. The driver holds the N rows and the manifest-sized file
+    lists the events must carry.
     """
     plans: list[dict] = []
     for event in events:
@@ -320,179 +414,51 @@ def validate_bagit_files_batch(
     if len({p["store"] for p in plans}) != 1:
         raise ValueError("one batch = one store root")
     store = plans[0]["store"]
-
-    # 1+2) ONE binaryFile scan over every archive, ONE untar fan-out.
-    # binaryFile paths come back with a file: scheme prefix — normalize
-    # when mapping archive → consignment.
-    archives = read_file_catalog(spark, [p["archive_path"] for p in plans])
-    # report-mode untar: a corrupt delivery yields one error row instead
-    # of failing the whole batch job — that consignment routes to its own
-    # error event below, everyone else proceeds
-    members = untar(archives, on_error="report")
-    plan_rows = [
-        (p["archive_path"], p["unpacked_root"], p["out_prefix"])
-        for p in plans
-    ]
-    plan_df = local_df(spark, 
-        plan_rows, "archive_path string, unpacked_root string, out_prefix string"
-    )
-    # persisted ONCE: three downstream actions (member write, validation
-    # report, manifest-list collect) all derive from the untarred member
-    # set — without the persist each action would re-scan and re-untar
-    # EVERY archive (MEMORY_AND_DISK: the member set is the same bytes a
-    # task already held during untar, spilled if the batch is large)
-    keyed = members.withColumn(
-        "archive_nofs", F.regexp_replace("archive", "^file:", "")
-    ).join(
-        F.broadcast(plan_df),
-        F.col("archive_nofs") == F.col("archive_path"),
-        "left",
-    ).persist()
-    _cached_members = keyed  # keep the handle: `keyed` is reassigned below
-    # and unpersist() on a derived frame would silently leak the cache
-
-    unpack_errors = {
-        r["unpacked_root"]: r["error"]
-        for r in keyed.filter(F.col("error").isNotNull())
-        .select("unpacked_root", "error")
-        .collect()
-    }
-    keyed = keyed.filter(F.col("error").isNull())
-    live_roots = [
-        p["unpacked_root"]
-        for p in plans
-        if p["unpacked_root"] not in unpack_errors
-    ]
-
-    # 3) ONE distributed member write for every consignment (members land
-    # under {store}/{out_prefix}/{name}, the untar-in-place layout)
-    to_write = keyed.select(
-        F.when(
-            F.col("out_prefix") != "",
-            F.concat_ws("/", F.col("out_prefix"), F.col("name")),
-        )
-        .otherwise(F.col("name"))
-        .alias("name"),
-        "content",
-    )
-    extracted_names = _write_members(to_write, store)
-    # Per-consignment extracted counts keyed by the (uuid-unique)
-    # out_prefix: counts EVERY member the archive produced, including a
-    # malformed tar's stray siblings outside the unpacked root — the
-    # sequential stage's extracted_total sees those too, and the count
-    # checks below must agree with it.
-    n_all_by_prefix: dict[str, int] = {p["out_prefix"]: 0 for p in plans}
-    prefixes_desc = sorted(n_all_by_prefix, key=len, reverse=True)
-    for name in extracted_names:
-        for pref in prefixes_desc:
-            if pref == "" or name.startswith(pref + "/"):
-                n_all_by_prefix[pref] += 1
-                break
-
-    # 4+5+6) manifests + checksums + counts: one relational report over
-    # member rows STILL IN FLIGHT (never re-read from the store). Members
-    # inside the unpacked root are named relative to it (the report's
-    # name contract); top-level siblings can't occur in a bagit archive.
-    rel_members = keyed.filter(
-        F.col("name").startswith(F.concat(F.element_at(F.split(F.col("unpacked_root"), "/"), -1), F.lit("/")))
-    ).select(
-        F.col("unpacked_root").alias("consignment"),
-        F.expr(
-            "substring(name, length(element_at(split(unpacked_root, '/'), -1)) + 2)"
-        ).alias("name"),
-        "content",
-    )
-    report_rows = {
-        r["consignment"]: r
-        for r in batch_validation_report(rel_members).collect()
-    }
-    manifest_lists = {}
-    for r in (
-        batch_manifest_entries(rel_members)
-        .select("consignment", "kind", "file")
-        .collect()
-    ):
-        manifest_lists.setdefault(r["consignment"], {KIND_ROOT: [], KIND_DATA: []})[
-            r["kind"]
-        ].append(r["file"])
-
-    # 7) store re-listing audit, ONE scan: the sequential stage's third
-    # count check (extracted vs what the store now actually holds)
-    listing = (
-        read_file_catalog(
-            spark, [f"{store}/{r}" for r in live_roots],
-            with_content=False,
-        )
-        if live_roots
-        else None
-    )
-    listing_counts: dict[str, int] = {}
-    if listing is not None:
-        listing = listing.select(
-            F.regexp_replace("path", "^file:" + re.escape(store) + "/", "").alias(
-                "relpath"
-            )
-        )
-        root_expr = F.coalesce(
-            *[
-                F.when(
-                    F.col("relpath").startswith(r + "/"),
-                    F.lit(r),
-                )
-                for r in live_roots
-            ]
-        )
-        listing_counts = {
-            r["root"]: r["n"]
-            for r in listing.select(root_expr.alias("root"))
-            .filter(F.col("root").isNotNull())
-            .groupBy("root")
-            .agg(F.count("*").alias("n"))
-            .collect()
+    # what the executors need, keyed by the path the scan reports
+    by_path = {
+        os.path.abspath(p["archive_path"]): {
+            k: p[k] for k in ("archive_path", "out_prefix", "unpacked_root")
         }
-    _cached_members.unpersist()
+        for p in plans
+    }
+
+    def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for archive, blob in zip(pdf["path"], pdf["content"]):
+                # binaryFile paths carry a file: scheme
+                plan = by_path[archive.removeprefix("file:")]
+                error, root_files, data_files = _check_bagit_archive(
+                    archive, blob, store, plan
+                )
+                rows.append({
+                    "archive": plan["archive_path"],
+                    "error": error,
+                    "root_files": root_files,
+                    "data_files": data_files,
+                })
+            if rows:
+                yield pd.DataFrame(rows)
+
+    checked = {
+        r["archive"]: r
+        for r in read_file_catalog(spark, list(by_path))
+        .select("path", "content")
+        .mapInPandas(
+            check,
+            "archive string, error string, root_files array<string>, "
+            "data_files array<string>",
+        )
+        .collect()
+    }
 
     out_events: list[dict] = []
     for p in plans:
         root = p["unpacked_root"]
         reference = p["reference"]
-        rep = report_rows.get(root)
-        lists = manifest_lists.get(root, {KIND_ROOT: [], KIND_DATA: []})
-        error: str | None = None
-        if root in unpack_errors:
-            error = (
-                f'Unpack failed for "{p["archive_path"]}": '
-                f"{unpack_errors[root]}"
-            )
-        elif rep is None:
-            error = f'Object "{p["archive_path"]}" produced no members'
-        elif rep["first_bad_file"] is not None:
-            # checksum errors come from the relational report (same
-            # message + precedence as the sequential stage's raises)
-            error = rep["error"]
-        else:
-            # the three count checks, in the sequential stage's order and
-            # with ITS operands: totals include stray members outside the
-            # unpacked root (n_all), which the root-relative report can't
-            # see — driver-side arithmetic on already-collected counts
-            n_all = n_all_by_prefix.get(p["out_prefix"], 0)
-            manifests_total = 1 + rep["n_root_listed"] + rep["n_data_listed"]
-            n_listed = listing_counts.get(root, 0)
-            if n_all != manifests_total:
-                error = (
-                    f"Incorrect total file count; {manifests_total} in "
-                    f"manifest, but {n_all} found"
-                )
-            elif rep["n_data_listed"] != rep["n_data_extracted"]:
-                error = (
-                    f"Incorrect data file count; {rep['n_data_listed']} in "
-                    f"manifest but {rep['n_data_extracted']} found"
-                )
-            elif n_listed != n_all:
-                error = (
-                    f"Incorrect data file count; {n_all} "
-                    f"extracted but {n_listed} found"
-                )
+        row = checked.get(p["archive_path"])
+        # the scan skips a 0-byte archive: no row, no members
+        error = row["error"] if row else _no_members_error(p["archive_path"])
         if error is not None:
             out_events.append(
                 ctx.emit_error(
@@ -500,13 +466,13 @@ def validate_bagit_files_batch(
                 )
             )
             continue
-        # sorted for determinism: the sequential stage carries manifest
-        # LINE order, which a distributed explode+collect can't promise —
-        # equivalence tests compare as sorted sets
+        # sorted, as this stage's lists always were: the sequential stage
+        # carries manifest LINE order, and equivalence tests compare as
+        # sorted sets
         validated = {
             "path": root,
-            "root": sorted(f"{root}/{f}" for f in lists[KIND_ROOT]),
-            "data": sorted(f"{root}/{f}" for f in lists[KIND_DATA]),
+            "root": sorted(f"{root}/{f}" for f in row["root_files"]),
+            "data": sorted(f"{root}/{f}" for f in row["data_files"]),
         }
         out_events.append(
             ctx.emit(

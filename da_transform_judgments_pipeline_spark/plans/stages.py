@@ -40,7 +40,7 @@ from ..operators.validation import (
 )
 from ..sources.archive import untar
 from ..sources.bagit import bag_info_to_dict, read_bag_info, read_file_metadata
-from ..sources.catalog import read_file_catalog
+from ..sources.catalog import catalog_lists, read_file_catalog
 from ..sources.manifest import read_manifest
 from ..sources.sinks import write_single_text
 from .events import create_event, latest_uuid, validate_event
@@ -242,9 +242,7 @@ def validate_bagit_files(
                 f"Incorrect data file count; {len(validated['data'])} in "
                 f"manifest but {len(extracted_data)} found"
             )
-        listing = (
-            read_file_catalog(spark, root_dir, with_content=False).count()
-        )
+        listing = _n_listed(store, extracted, out_prefix)
         if listing != extracted_total:
             raise ValueError(
                 f"Incorrect data file count; {extracted_total} extracted "
@@ -362,24 +360,48 @@ def bagit_to_dri_sip(spark: SparkSession, event: dict, ctx: StageContext) -> dic
         return ctx.emit_error(EVENT_SIP_ERROR, event, reference, e)
 
 
+def _n_listed(store: str, keys: list[str], out_prefix: str) -> int:
+    """Bagit validation's third count check: how many of the extracted
+    ``keys`` (store keys, under ``out_prefix``) the store now holds AND a
+    file scan lists. It stats the keys instead of re-listing the unpacked
+    root, because a later stage writes its ``sip/`` under that same root
+    and a replay of the chain must not count those files. It keeps the
+    scan's hidden-file rule (applied below ``out_prefix``), because the
+    SIP stage reads ``data/`` with that scan and would leave such a
+    member out of the SIP."""
+    n = 0
+    for key in set(keys):
+        try:
+            size = os.stat(os.path.join(store, key)).st_size
+        except FileNotFoundError:
+            continue
+        n += catalog_lists(key[len(out_prefix) + 1:] if out_prefix else key, size)
+    return n
+
+
 def _dri_schema_text(name: str) -> str:
     res = importlib.resources.files("da_transform_judgments_pipeline_spark.plans")
     return (res / "dri_schemas" / name).read_text()
 
 
+def _write_member(dest_root: str, name: str, content) -> None:
+    """Write one file under dest_root (shared FS / object store)."""
+    path = os.path.join(dest_root.rstrip("/") or "/", name)
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path, "wb") as f:
+        f.write(bytes(content))
+
+
 def _write_members(members, dest_root: str) -> list[str]:
     """Distributed member write: each partition writes its (name, content)
-    rows under dest_root (shared FS / object store) and yields their
-    names, so the write and the returned name list are ONE Spark action
-    over ``members`` — no persist, no second pass."""
-    dest_root = dest_root.rstrip("/") or "/"
+    rows under dest_root and yields their names, so the write and the
+    returned name list are ONE Spark action over ``members`` — no
+    persist, no second pass (the sequential untar-in-place and the
+    batched SIP write)."""
 
     def write_partition(rows):
         for row in rows:
-            path = os.path.join(dest_root, row["name"])
-            os.makedirs(os.path.dirname(path), exist_ok=True)
-            with open(path, "wb") as f:
-                f.write(bytes(row["content"]))
+            _write_member(dest_root, row["name"], row["content"])
             yield row["name"]
 
     return members.select("name", "content").rdd.mapPartitions(

@@ -112,6 +112,22 @@ def _untar_bytes(
     return out
 
 
+def untar_blob(
+    archive: str,
+    blob: bytes,
+    max_archive_bytes: int | None = DEFAULT_MAX_ARCHIVE_BYTES,
+) -> list[dict]:
+    """One archive's bytes → its member dicts: the compressed blob is
+    held to ``max_archive_bytes`` (an :class:`ArchiveTooLargeError`
+    naming ``archive``), then untarred under the same bound on the
+    inflated bytes. :func:`untar` and the batched bagit validation call
+    it once per archive."""
+    _check_size(f"archive {archive!r}", len(blob), max_archive_bytes)
+    return _untar_bytes(bytes(blob), max_bytes=max_archive_bytes)
+
+
+# untar's schema plus a nullable name and an ``error`` column: the
+# ``on_error="report"`` shape of :func:`unzip`
 UNTAR_REPORT_SCHEMA = T.StructType(
     list(UNTAR_RESULT_SCHEMA)[:1]
     + [T.StructField("name", T.StringType(), True)]
@@ -125,7 +141,6 @@ def untar(
     path_col: str = "path",
     content_col: str = "content",
     max_archive_bytes: int | None = DEFAULT_MAX_ARCHIVE_BYTES,
-    on_error: str = "raise",
 ) -> DataFrame:
     """S13 unpack: (path, content) rows → one row per member
     (archive, name, size, mtime, content) via mapInPandas (UDTF shape:
@@ -133,22 +148,9 @@ def untar(
 
     Archives above ``max_archive_bytes`` fail fast with
     :class:`ArchiveTooLargeError` naming the archive, instead of an
-    opaque executor OOM (the whole blob lives in the task's RAM).
-
-    ``on_error="report"`` adds an ``error`` column and isolates corrupt
-    archives instead of failing the job: a blob that won't untar (bad
-    gzip, truncated tar, over the size bound) yields ONE row
-    (archive, name=NULL, error=<message>) and every healthy archive's
-    members flow through with error=NULL. The batched stages route the
-    error rows per consignment — one bad delivery must not fail a
-    thousand-consignment job. Default "raise" keeps the strict
-    single-archive contract.
+    opaque executor OOM (the whole blob lives in the task's RAM); so do
+    archives that inflate past it. A blob that won't untar fails the job.
     """
-    if on_error not in ("raise", "report"):
-        raise ValueError(f"on_error must be 'raise' or 'report', not {on_error!r}")
-    report = on_error == "report"
-    schema = UNTAR_REPORT_SCHEMA if report else UNTAR_RESULT_SCHEMA
-
     src = archives.select(
         F.col(path_col).alias("archive"), F.col(content_col).alias("_blob")
     )
@@ -156,40 +158,19 @@ def untar(
     def expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for archive, blob in zip(pdf["archive"], pdf["_blob"]):
-                try:
-                    _check_size(
-                        f"archive {archive!r}", len(blob), max_archive_bytes
-                    )
-                    members = _untar_bytes(
-                        bytes(blob), max_bytes=max_archive_bytes
-                    )
-                except Exception as e:
-                    if not report:
-                        raise
+                members = untar_blob(archive, blob, max_archive_bytes)
+                if members:
                     yield pd.DataFrame(
                         {
-                            "archive": [archive],
-                            "name": [None],
-                            "size": [0],
-                            "mtime": [None],
-                            "content": [None],
-                            "error": [f"{type(e).__name__}: {e}"],
+                            "archive": [archive] * len(members),
+                            "name": [m["name"] for m in members],
+                            "size": [m["size"] for m in members],
+                            "mtime": [m["mtime"] for m in members],
+                            "content": [m["content"] for m in members],
                         }
                     )
-                    continue
-                if members:
-                    out = {
-                        "archive": [archive] * len(members),
-                        "name": [m["name"] for m in members],
-                        "size": [m["size"] for m in members],
-                        "mtime": [m["mtime"] for m in members],
-                        "content": [m["content"] for m in members],
-                    }
-                    if report:
-                        out["error"] = [None] * len(members)
-                    yield pd.DataFrame(out)
 
-    return src.mapInPandas(expand, schema=schema)
+    return src.mapInPandas(expand, schema=UNTAR_RESULT_SCHEMA)
 
 
 def tar_gz_bytes(
@@ -372,9 +353,11 @@ def unzip(
 ) -> DataFrame:
     """The :func:`untar` twin for ZIP containers (deliveries and Office
     packages arrive zipped as often as tarred): (path, content) rows →
-    one row per member with the SAME schema and the same
-    ``on_error='report'`` isolation contract, so downstream stages are
-    container-agnostic. Decompression is bounded per member AND
+    one row per member with the SAME schema, so downstream stages are
+    container-agnostic. ``on_error='report'`` adds an ``error`` column
+    and isolates a blob that won't unzip (over the size bound, not a
+    zip) as ONE row (archive, name=NULL, error=<message>) while every
+    healthy archive's members flow through with error=NULL. Decompression is bounded per member AND
     cumulatively on actual bytes (zip headers can lie small — the
     docx_parser bomb posture generalized to the archive surface)."""
     if on_error not in ("raise", "report"):
@@ -400,8 +383,7 @@ def unzip(
                 except Exception as e:
                     if not report:
                         raise
-                    # size is non-nullable in the shared schema: 0 like
-                    # untar's report rows
+                    # size is non-nullable in the shared schema
                     yield pd.DataFrame([{
                         "archive": archive, "name": None, "size": 0,
                         "mtime": None, "content": None,

@@ -38,6 +38,21 @@ def read_file_catalog(
     return df
 
 
+def catalog_lists(relpath: str, size: int) -> bool:
+    """Whether :func:`read_file_catalog` over a root lists the file of
+    ``size`` bytes at ``relpath`` below it. Spark's file listing hides a
+    path when any component starts with ``.``, or starts with ``_`` and
+    holds no ``=`` (its metadata/temp-file rule, which keeps ``_k=v``
+    partition dirs), or ends in ``._COPYING_``; the binaryFile source
+    drops 0-byte files (all checked on Spark 4.1.2)."""
+    return size > 0 and not any(
+        part.startswith(".")
+        or (part.startswith("_") and "=" not in part)
+        or part.endswith("._COPYING_")
+        for part in relpath.split("/")
+    )
+
+
 def with_consignment_partitions(df: DataFrame, root: str) -> DataFrame:
     """Derive `consignments/{type}/{reference}/{retry}/relpath` partition
     columns from the path (reference key convention:

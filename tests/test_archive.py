@@ -222,14 +222,14 @@ def test_untar_tar_zst_transport(spark):
     assert set(rows) == {"a.txt", "dir/b.bin"}
     assert bytes(rows["a.txt"]["content"]) == b"alpha"
     # the whole-archive bound applies to the INFLATED bytes too
-    small = A.untar(df, max_archive_bytes=16, on_error="report").collect()
-    assert len(small) == 1 and "16" in small[0]["error"]
+    with pytest.raises(Exception, match="above the 16-byte"):
+        A.untar(df, max_archive_bytes=16).collect()
 
 
 def test_untar_gz_bz2_xz_bounded_like_zst(spark):
     """r12 (ADVICE r11): every tar transport honors the same
     decompressed-size bound — a gz tarbomb fails fast with a typed
-    error row, exactly like the .tar.zst twin, instead of tarfile
+    error, exactly like the .tar.zst twin, instead of tarfile
     inflating it unbounded."""
     import bz2 as _bz2
     import gzip as _gz
@@ -259,6 +259,5 @@ def test_untar_gz_bz2_xz_bounded_like_zst(spark):
         assert [r["name"] for r in ok] == ["bomb.bin"]
         # bounded: compressed size passes the archive guard, inflation
         # is stopped by the codec layer before materializing
-        rep = A.untar(df, max_archive_bytes=65536, on_error="report").collect()
-        assert len(rep) == 1 and rep[0]["name"] is None, label
-        assert "Bomb" in rep[0]["error"] or "bound" in rep[0]["error"], label
+        with pytest.raises(Exception, match="Bomb|whole-archive-in-RAM bound"):
+            A.untar(df, max_archive_bytes=65536).collect()

@@ -253,6 +253,9 @@ def test_batch_stage_matches_sequential(spark, tmp_path):
     n_seq = len(tracker.getJobIdsForGroup("seq-stage"))
     n_bat = len(tracker.getJobIdsForGroup("batch-stage"))
     assert n_bat < n_seq, f"batch ran {n_bat} jobs vs sequential {n_seq}"
+    # one scan, one mapInPandas, one collect: a single job, plus room
+    # for a listing job
+    assert n_bat <= 2, f"batch ran {n_bat} jobs"
 
 
 def _available_event(delivery, ref):
@@ -384,15 +387,19 @@ FILE_METADATA_HEADER = (
 )
 
 
-def members_for_sip(consignment: str, header_only: bool = False):
-    """Unpacked-bagit members for the stage-3 (DRI SIP) flow: data files,
-    a matching file-metadata.csv (its header line only when
-    ``header_only``), and a bag-info.txt carrying the series + export
-    datetime the transform needs."""
+def members_for_sip(
+    consignment: str, header_only: bool = False, extra_data: tuple = ()
+):
+    """Unpacked-bagit members for the stage-3 (DRI SIP) flow: data files
+    (plus ``extra_data`` names, listed like the others), a matching
+    file-metadata.csv (its header line only when ``header_only``), and a
+    bag-info.txt carrying the series + export datetime the transform
+    needs."""
     data = {
         "data/content/file-1.txt": f"{consignment} one".encode(),
         "data/content/file-2.txt": f"{consignment} two".encode(),
     }
+    data.update({name: f"{consignment} {name}".encode() for name in extra_data})
     fm = FILE_METADATA_HEADER
     for path, blob in sorted(data.items()):
         name = path.rsplit("/", 1)[1]
@@ -586,22 +593,31 @@ def test_bagit_to_dri_sip_batch_routes_config_errors(spark, tmp_path):
 
 def test_full_chain_to_sip(spark, tmp_path):
     """Three job sets end-to-end: bagit-available deliveries → validated
-    → SIP, with a stage-B failure short-circuiting before the SIP
-    stage."""
+    → SIP, with stage-B failures short-circuiting before the SIP stage:
+    a tampered data file, and a data file named ``_draft.txt``, which a
+    Spark file scan does not list (the SIP's ``data/`` scan would drop
+    it). A replay of the chain over the same store (a crash after the
+    SIP write, before the ledger commit) gives the same terminal events,
+    in the batch form, and stage B gives the same events in the
+    sequential form: the SIP's files under the unpacked root must not
+    count as extracted members."""
     from da_transform_judgments_pipeline_spark.plans.batch import (
         validate_consignments_batch,
+    )
+    from da_transform_judgments_pipeline_spark.plans.stages import (
+        bagit_to_dri_sip,
     )
 
     delivery = tmp_path / "fdelivery"
     delivery.mkdir()
-    ctx = StageContext(
-        store_root=str(tmp_path / "fstore"),
-        out_root=str(tmp_path / "fout"),
+    specs = (
+        ("TDR-2026-FAA", {}),
+        ("TDR-2026-FBB", {"tamper": True}),
+        ("TDR-2026-FDR", {"extra_data": ("data/content/_draft.txt",)}),
     )
-    events = []
-    for ref, good in (("TDR-2026-FAA", True), ("TDR-2026-FBB", False)):
-        entries = members_for_sip(ref)
-        if not good:  # corrupt a data file AFTER manifests were built
+    for ref, spec in specs:
+        entries = members_for_sip(ref, extra_data=spec.get("extra_data", ()))
+        if spec.get("tamper"):  # corrupt a data file AFTER manifests were built
             entries["data/content/file-1.txt"] = b"tampered"
         buf = io.BytesIO()
         with tarfile.open(fileobj=buf, mode="w:gz") as tf:
@@ -615,11 +631,25 @@ def test_full_chain_to_sip(spark, tmp_path):
         (delivery / f"{ref}.tar.gz.sha256").write_text(
             f"{sha(blob)}  {ref}.tar.gz\n"
         )
-        events.append(_available_event(delivery, ref))
+    events = [_available_event(delivery, ref) for ref, _ in specs]
 
+    def terminal(out):
+        return [
+            (
+                e["producer"]["event-name"],
+                e["parameters"][e["producer"]["event-name"]].get("errors"),
+            )
+            for e in out
+        ]
+
+    ctx = StageContext(
+        store_root=str(tmp_path / "fstore"),
+        out_root=str(tmp_path / "fout"),
+    )
     out = validate_consignments_batch(spark, events, ctx, to_sip=True)
     assert [e["producer"]["event-name"] for e in out] == [
         "dri-preingest-sip-available",
+        EVENT_BAGIT_ERROR,
         EVENT_BAGIT_ERROR,
     ]
     url = out[0]["parameters"]["dri-preingest-sip-available"]["s3-folder-url"]
@@ -628,6 +658,36 @@ def test_full_chain_to_sip(spark, tmp_path):
     assert any(n.endswith("file-1.txt") for n in names)
     errs = out[1]["parameters"]["bagit-validation-error"]["errors"]
     assert "does not match expected checksum" in errs[0]
+    errs = out[2]["parameters"]["bagit-validation-error"]["errors"]
+    assert errs == ["Incorrect data file count; 8 extracted but 7 found"]
+    replay = validate_consignments_batch(spark, events, ctx, to_sip=True)
+    assert terminal(replay) == terminal(out)
+
+    ctx_seq = StageContext(
+        store_root=str(tmp_path / "fstore-seq"),
+        out_root=str(tmp_path / "fout-seq"),
+    )
+
+    def sequential_stage_b():
+        ends = []
+        for e in events:
+            e = validate_bagit(spark, e, ctx_seq)
+            if e["producer"]["event-name"] == "bagit-received":
+                e = validate_bagit_files(spark, e, ctx_seq)
+            ends.append(e)
+        return ends
+
+    first = sequential_stage_b()
+    assert [name for name, _ in terminal(first)] == [
+        EVENT_BAGIT_VALIDATED,
+        EVENT_BAGIT_ERROR,
+        EVENT_BAGIT_ERROR,
+    ]
+    sip = bagit_to_dri_sip(spark, first[0], ctx_seq)
+    assert sip["producer"]["event-name"] == "dri-preingest-sip-available"
+    # the sequential SIP stage keeps the reference's write-once guard (it
+    # refuses to overwrite a SIP), so the replay stops at stage B
+    assert terminal(sequential_stage_b()) == terminal(first)
 
 
 def test_orchestrated_batch_stage_via_pipeline(spark, tmp_path):

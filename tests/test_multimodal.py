@@ -463,7 +463,7 @@ def test_audiocodec_rejects_zero_channels_and_zero_rate():
 
 
 def test_media_on_error_report_isolates_corrupt_blobs(spark):
-    """on_error='report' (untar contract) for the three real-decode media
+    """on_error='report' (unzip contract) for the three real-decode media
     operators: healthy blobs flow through with error=NULL, a corrupt blob
     yields a NULL-feature row carrying the message instead of failing the
     job; the default mode still raises."""
